@@ -21,17 +21,18 @@ Scale notes (the whole point of these shapes):
 
 Hash choice is a backend knob: ``hash_backend='md5'`` (default, hex
 string — present and bit-identical in Spark and DuckDB, so every
-operator has an exact SQL oracle) or ``'xxhash64'`` (JVM integer hash,
-~an order of magnitude cheaper per shingle — the production choice at
-real scale; no DuckDB twin, so gate queries keep md5).  Both run the
-identical banding/verification plan; because candidates are
-exact-verified, the final pair set is insensitive to the backend up to
-banding recall (tested).
+operator has an exact SQL oracle) or ``'xxhash64'`` (JVM integer hash
+plus vectorized mins, about 4× cheaper on the signature stage at 128
+hashes — the production choice at real scale; no DuckDB twin, so gate
+queries keep md5).  Both run the identical banding/verification plan;
+because candidates are exact-verified, the final pair set is
+insensitive to the backend up to banding recall (tested).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 N_MINHASH = 128
@@ -84,26 +85,31 @@ def minhash_signatures(
 
     - ``'md5'``: h_i = min over shingles of md5(i || ':' || shingle) —
       hex strings, bit-identical in DuckDB, the oracle-parity default.
-      Measured cost note: the n_hashes × |sset| inner loop runs as an
-      INTERPRETED higher-order expression (Spark does not codegen
-      lambda bodies), so per-shingle cost is dominated by closure eval
-      + string building, not the digest itself — a drop-in integer
-      hash only bought 1.12×.
+      Computed as ONE fold over the shingle set: each shingle's digest
+      for hash index i is merged into running minimum i with ``least``,
+      which skips the initial nulls, so an empty or null set (null
+      ``text``) gives n nulls, as ``array_min`` of nothing does.  The
+      set is the fold's array argument, outside every lambda, so it is
+      evaluated once per doc.  A per-hash
+      ``transform(..., hi -> array_min(transform(sset, …)))`` instead
+      lets CollapseProject inline the set expression into the ``hi``
+      lambda, rebuilding it (and a ``split(text)`` per window) n_hashes
+      times per doc.
     - ``'xxhash64'``: the standard parametric family — each shingle is
       hashed ONCE with the JVM's xxhash64, then
       h_i = min over shingles of (a_i · x mod 2⁶⁴) with odd multipliers
       a_i (multiply-shift universal hashing), computed as one
       Arrow-vectorized NumPy kernel (`minimum.reduceat` over the
-      flattened batch).  Replaces n_hashes interpreted hash calls per
-      shingle with one JVM hash + n_hashes vectorized multiplies —
-      the at-scale path (measured ~19× on the signature stage).
+      flattened batch): one JVM hash + n_hashes vectorized multiplies
+      per shingle instead of n_hashes interpreted md5 calls.
     """
     _hash_fn_sql(hash_backend)
     base = _with_sets(docs, shingle_n)
     if hash_backend == "md5":
         sig = F.expr(
-            f"transform(sequence(0, {n_hashes - 1}),"
-            f" hi -> array_min(transform(sset, ht -> md5(concat(hi, ':', ht)))))"
+            f"aggregate(coalesce(sset, array()),"
+            f" array_repeat(cast(null as string), {n_hashes}),"
+            f" (acc, ht) -> transform(acc, (x, hi) -> least(x, md5(concat(hi, ':', ht)))))"
         )
         return base.select("doc_id", "sset", sig.alias("sig"))
     return _minhash_sigs_parametric(base, n_hashes)
@@ -200,38 +206,22 @@ def _lsh_jaccard_pairs(
     sigs = minhash_signatures(docs, n_hashes, shingle_n, hash_backend)
     bands = _band_keys(sigs, n_hashes, n_bands)
     if max_bucket is not None:
-        # Capped buckets, evaluated in one exchange chain on band_key:
-        # a COUNT-based width screen runs first (map-side partial agg —
-        # a mega-bucket costs a counter, never a buffer), the surviving
-        # band keys filter the bands via a co-partitioned join (the
-        # bands exchange is identical on both subtrees, so Spark's
-        # ReuseExchange evaluates the expensive signature projection
-        # ONCE), and only then does each ≤max_bucket bucket build its
-        # sorted member list and explode its ≤w² pairs bucket-locally.
-        # The former shape (cap groupBy + band self-join) re-evaluated
-        # the minhash transform on additional subtrees (guide §1.2);
-        # collecting before the width filter would instead materialize
-        # mega-buckets in a single aggregation buffer — both rejected.
+        # Capped buckets on ONE band_key exchange, so the signature
+        # projection below it runs once: the width screen is a window
+        # count over that exchange's partitions (the window spills; a
+        # mega-bucket is counted, never buffered in one aggregation),
+        # and only the 2 ≤ w ≤ max_bucket survivors build their sorted
+        # member list and explode their ≤w² pairs bucket-locally — the
+        # groupBy reuses the window's band_key partitioning.  A separate
+        # width groupBy joined back to the bands would plan a second
+        # band_key exchange, with the whole signature under each.
         # Pair set matches the join shape: strict doc_a < doc_b (equal
         # ids — duplicate doc_id rows — pair in neither), cross-band
         # repeats collapse in the same distinct.
-        # ONE explicit exchange on band_key shared by both consumers:
-        # a plain groupBy(count) would partial-aggregate BELOW its
-        # exchange (shipping (band_key, count) rows) while the join
-        # ships (doc_id, band_key) rows — different payloads, so Spark
-        # could never reuse the shuffle and the signature projection
-        # ran twice.  Repartitioning first makes the two subtrees share
-        # the identical exchange (ReusedExchange), and both the width
-        # screen and the join consume it in place.
-        bands_p = bands.repartition("band_key")
-        ok = (
-            bands_p.groupBy("band_key")
-            .agg(F.count("*").alias("_w"))
-            .filter((F.col("_w") <= max_bucket) & (F.col("_w") >= 2))
-            .select("band_key")
-        )
+        width = F.count("*").over(Window.partitionBy("band_key"))
         cand = (
-            bands_p.join(ok, "band_key")
+            bands.withColumn("_w", width)
+            .filter((F.col("_w") <= max_bucket) & (F.col("_w") >= 2))
             .groupBy("band_key")
             .agg(F.sort_array(F.collect_list("doc_id")).alias("_members"))
             .select(

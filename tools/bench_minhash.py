@@ -7,9 +7,10 @@ benchmarked head-to-head and the table lands in BENCH/BASELINE.md's
 companion section.  Forced via an aggregation over the signature array
 (no write path, no candidate join: isolates the projection).
 
-Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 8),
-SPARK_GRAFT_REPLICATE (default 48), SPARK_GRAFT_RUNS (default 3).
-Prints one JSON line.
+Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default: the
+CPUs this process may run on), SPARK_GRAFT_REPLICATE (default 1: the
+whole run takes under a minute on 4 CPUs), SPARK_GRAFT_RUNS (default
+3).  Prints one JSON line.
 """
 
 from __future__ import annotations
@@ -24,9 +25,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
-    repl = int(os.environ.get("SPARK_GRAFT_REPLICATE", "48"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+    repl = int(os.environ.get("SPARK_GRAFT_REPLICATE", "1"))
     runs = int(os.environ.get("SPARK_GRAFT_RUNS", "3"))
+    # replicated_documents sizes its partitions from this variable
+    os.environ["SPARK_GRAFT_CPUS"] = str(cpus)
 
     from pyspark.sql import functions as F
 

@@ -59,12 +59,14 @@ NOTES = {
         "hot entities (AQE only fixes skewed *joins*)."
     ),
     "ngram_jaccard": (
-        "Near-dup via MinHash bands: signatures are a pure projection; "
-        "candidate generation (r06) is ONE groupBy on band_key — each "
-        "capped bucket's sorted member list explodes its own <= w\u00b2 pairs — "
-        "so the signature projection is evaluated once (the former "
-        "cap-groupBy + band self-join evaluated it on three subtrees).  "
-        "Exact Jaccard verify touches bucket-mates only; no cross product."
+        "Near-dup via MinHash bands: signatures are a pure projection, one "
+        "fold per doc over its shingle set (the set is built once, outside "
+        "every lambda).  Candidate generation runs on ONE band_key "
+        "Exchange, so the signature projection below it is evaluated once: "
+        "a Window count screens bucket widths, and the same partitioning "
+        "feeds the groupBy where each capped bucket's sorted member list "
+        "explodes its own <= w\u00b2 pairs.  Exact Jaccard verify touches "
+        "bucket-mates only; no cross product."
     ),
     "lsh_pairs": (
         "Amplified embedding LSH: buckets are a projection (posexplode "
